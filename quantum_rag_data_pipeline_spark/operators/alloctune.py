@@ -18,13 +18,10 @@ dbscan) allocates a new size every group and never hits that fast
 path.
 
 Call ``tune_worker_allocator()`` at the top of a worker closure; it is
-idempotent per process, best-effort (non-glibc platforms no-op), and
-disabled with SPARK_GRAFT_ALLOC_TUNE=0 for A/B measurement.
+idempotent per process and best-effort (non-glibc platforms no-op).
 """
 
 from __future__ import annotations
-
-import os
 
 _DONE = False
 
@@ -35,7 +32,7 @@ _M_MMAP_THRESHOLD = -3
 
 def tune_worker_allocator() -> None:
     global _DONE
-    if _DONE or os.environ.get("SPARK_GRAFT_ALLOC_TUNE", "1") != "1":
+    if _DONE:
         return
     _DONE = True
     try:

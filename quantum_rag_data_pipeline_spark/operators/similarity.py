@@ -268,6 +268,41 @@ def _block_grid(spark, B: int, full: bool = False) -> DataFrame:
     return g if full else g.filter(F.col("bx") <= F.col("by"))
 
 
+def _membership(grids, id_col: str, vec_col: str) -> DataFrame:
+    """The (pid, _diag, _side, _id, _vec) membership frame of the
+    block-pair decomposition, for one or more grids given as
+    ``(a_df, b_df, B)``. Rows hash into B blocks by id and join the
+    broadcast grid on their block. ``b_df=None`` is a SELF grid over
+    ``a_df``'s unordered block pairs x ≤ y: a row is side ``a`` in the
+    groups of its block as x and side ``b`` in those where it is y > x,
+    so a diagonal group (x, x) carries a-rows only. Otherwise it is the
+    full B×B CROSS grid, a_df rows as side ``a`` and b_df rows as side
+    ``b``. Either way every row pair of a grid meets in exactly one
+    group. Each grid's pids are offset past the earlier grids' B², so
+    several grids feed one ``_gram`` pass without their groups merging,
+    and ``_diag`` (x = y on a self grid) rides in the group key."""
+    def side(df: DataFrame, name: str, B: int, g: DataFrame, blk: str) -> DataFrame:
+        rows = df.select(
+            F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("_blk"),
+        )
+        return rows.join(F.broadcast(g), rows["_blk"] == g[blk]).select(
+            "pid", "_diag", F.lit(name).alias("_side"), "_id", "_vec")
+
+    mem, off = None, 0
+    for a_df, b_df, B in grids:
+        cross = b_df is not None
+        grid = _block_grid(a_df.sparkSession, B, full=cross).select(
+            (F.col("pid") + off).alias("pid"), "bx", "by",
+            (F.lit(False) if cross else F.col("bx") == F.col("by")).alias("_diag"))
+        part = side(a_df, "a", B, grid, "bx").unionByName(
+            side(b_df, "b", B, grid, "by") if cross
+            else side(a_df, "b", B, grid.filter("bx <> by"), "by"))
+        mem = part if mem is None else mem.unionByName(part)
+        off += B * B
+    return mem
+
+
 def embedding_near_dup_pairs_fast(
     df: DataFrame,
     dim: int,
@@ -296,70 +331,10 @@ def embedding_near_dup_pairs_fast(
     all-pairs is O(n²) on any engine — at 100 TB use LSH/cluster blocking
     (``embedding_near_dup_pairs(block_col=...)``); this is the exact path
     for corpora whose n²·d flops are budgeted."""
-    import numpy as np
-
-    spark = df.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     B = n_blocks or _auto_blocks(df.count(), n_part)
-    thr = threshold - margin
-
-    rows = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("_blk"),
-    )
-    pair_df = _block_grid(spark, B)
-    mem_a = rows.join(F.broadcast(pair_df), rows["_blk"] == pair_df["bx"]) \
-        .select("pid", F.lit("a").alias("_side"), "_id", "_vec")
-    mem_b = rows.join(F.broadcast(pair_df.filter("bx <> by")), rows["_blk"] == pair_df["by"]) \
-        .select("pid", F.lit("b").alias("_side"), "_id", "_vec")
-    mem = mem_a.unionByName(mem_b)
-
-    def find_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        from quantum_rag_data_pipeline_spark.operators.alloctune import \
-            tune_worker_allocator
-        tune_worker_allocator()
-        empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"), "id_b": pd.Series(dtype="int64")})
-        a = pdf[pdf["_side"] == "a"]
-        b = pdf[pdf["_side"] == "b"]
-        if len(a) == 0:
-            return empty
-        ids_a = a["_id"].to_numpy(dtype=np.int64)
-        A = np.stack(a["_vec"].to_numpy()).astype(np.float64)
-        An = A / np.linalg.norm(A, axis=1, keepdims=True)
-        # CHUNKed gram slices, same rationale as _chunked_pair_topk:
-        # the full block-pair gram (+ its boolean mask + np.triu's
-        # second full-size temp) is fresh RSS the worker re-faults at
-        # ~20 MB/s on this rig; 1024-row slices keep temps repeated-size
-        # so allocation reaches steady state after one slice. Emitted
-        # pair SETS are identical (thresholding is per-element).
-        las, lbs = [], []
-        # diagonality from the GROUP ID, not len(b) (round 15 hardening,
-        # same as find_candidates): a cross group whose by-block is empty
-        # must emit nothing, not re-run the diagonal kernel (which would
-        # duplicate that block's within-pairs in the output).
-        pid = int(pdf["pid"].iloc[0])
-        if pid // B != pid % B and len(b) == 0:
-            return empty
-        if len(b):  # cross-block pair (x < y): a-side × b-side only
-            ids_b = b["_id"].to_numpy(dtype=np.int64)
-            Bm = np.stack(b["_vec"].to_numpy()).astype(np.float64)
-            Bn = Bm / np.linalg.norm(Bm, axis=1, keepdims=True)
-            for off in range(0, An.shape[0], 1024):
-                ii, jj = np.nonzero(An[off:off + 1024] @ Bn.T >= thr)
-                las.append(ids_a[ii + off])
-                lbs.append(ids_b[jj])
-        else:  # diagonal pair (x, x): upper triangle of the block's gram
-            for off in range(0, An.shape[0], 1024):
-                ii, jj = np.nonzero(An[off:off + 1024] @ An.T >= thr)
-                up = jj > ii + off
-                las.append(ids_a[ii[up] + off])
-                lbs.append(ids_a[jj[up]])
-        if not las or not (la := np.concatenate(las)).size:
-            return empty
-        lb = np.concatenate(lbs)
-        return pd.DataFrame({"id_a": np.minimum(la, lb), "id_b": np.maximum(la, lb)})
-
-    cand = mem.groupBy("pid").applyInPandas(find_pairs, "id_a long, id_b long")
+    cand = _gram(_membership([(df, None, B)], id_col, vec_col), dim,
+                 threshold=threshold - margin)
     vecs = df.select(F.col(id_col), F.col(vec_col), norm(F.col(vec_col), dim).alias("_n"))
     a = vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"), F.col("_n").alias("n_a"))
     b = vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"), F.col("_n").alias("n_b"))
@@ -478,6 +453,90 @@ def _chunked_pair_topk(An: "np.ndarray", Bn: "np.ndarray", keep: int,
     return ra, ca, rb, cb
 
 
+def _gram(mem: DataFrame, dim: int | None, threshold: float | None = None,
+          keep: int | None = None) -> DataFrame:
+    """THE blocked-gram kernel every pairwise-similarity operator runs:
+    one ``applyInPandas`` pass over a (pid, _diag, _side, _id, _vec)
+    membership frame (``_membership``, or semdedup's clusters), one
+    normalized BLAS gram per group, a-side rows × b-side rows for a cross
+    group and the a-block against itself for a diagonal one. Vectors are
+    sliced to ``dim`` before they are normalized, so the prefilter sees
+    exactly the components the dim-bounded exact scores do. It emits one
+    of two things:
+
+    - ``threshold``: the id pairs (id_a < id_b) whose gram score is ≥
+      ``threshold`` (upper triangle only on a diagonal group) — the
+      near-dup / semdedup prefilter; callers rescore them exactly;
+    - ``keep``: per row its top-``keep`` gram neighbors in the group (both
+      directions on a cross group, self excluded on a diagonal one), each
+      pair scored with its EXACT sequential cosine (``_seq_cos``,
+      bit-identical to the plan-side ``dot/(norm·norm)`` fold) — the kNN
+      candidates, ranked by ``_knn_topk``. Round 11 moved this scoring
+      in-pass: the old rescore join attached 512-byte vectors to ~n·B·keep
+      candidate rows (~100 GB of shuffle at the 200k-vector control).
+
+    Grams are computed in CHUNK-row slices (``_chunked_pair_topk``): the
+    full block-pair gram plus its masks is fresh RSS the worker re-faults
+    at ~20 MB/s on this rig, while repeated-size slices reach
+    steady-state allocation after the first; emitted sets are unchanged.
+
+    Diagonality comes from the GROUP KEY, never from which sides showed
+    up (round 15 hardening): a cross group whose b-block is empty must
+    emit nothing, where inferring "diagonal" from len(b) == 0 re-ran the
+    within-block kernel and duplicated that block's pairs. Such a group
+    returns before any a-side numpy work."""
+    import numpy as np
+
+    if keep is None:
+        schema, cols = "id_a long, id_b long", {"id_a": "int64", "id_b": "int64"}
+    else:
+        schema = "src long, dst long, cos_sim double"
+        cols = {"src": "int64", "dst": "int64", "cos_sim": "float64"}
+    empty = pd.DataFrame({c: pd.Series(dtype=t) for c, t in cols.items()})
+
+    def load(part: pd.DataFrame):
+        V = np.stack(part["_vec"].to_numpy()).astype(np.float64)[:, :dim]
+        return (part["_id"].to_numpy(dtype=np.int64), V,
+                V / np.linalg.norm(V, axis=1, keepdims=True))
+
+    def kernel(key, pdf):  # no type hints: applyInPandas would try to infer a UDF type
+        from quantum_rag_data_pipeline_spark.operators.alloctune import \
+            tune_worker_allocator
+        tune_worker_allocator()  # varied-size grams and gathers re-fault
+        diagonal = bool(key[1])
+        is_a = (pdf["_side"] == "a").to_numpy()
+        if not is_a.any() or (not diagonal and is_a.all()):
+            return empty
+        ids_a, A, An = load(pdf[is_a])
+        ids_b, Bm, Bn = (ids_a, A, An) if diagonal else load(pdf[~is_a])
+        if keep is None:
+            las, lbs = [], []
+            for off in range(0, An.shape[0], 1024):
+                ii, jj = np.nonzero(An[off:off + 1024] @ Bn.T >= threshold)
+                if diagonal:
+                    up = jj > ii + off
+                    ii, jj = ii[up], jj[up]
+                las.append(ids_a[ii + off])
+                lbs.append(ids_b[jj])
+            la, lb = np.concatenate(las), np.concatenate(lbs)
+            return pd.DataFrame({"id_a": np.minimum(la, lb), "id_b": np.maximum(la, lb)})
+        d = A.shape[1]
+        na = _seq_norms(A, d)
+        nb = na if diagonal else _seq_norms(Bm, d)
+        if diagonal:
+            ii, jj = _chunked_pair_topk(An, An, keep, diagonal=True)
+            src, dst, cos = ids_a[ii], ids_a[jj], _seq_cos(A, A, ii, jj, na, na, d)
+        else:
+            i1, j1, i2, j2 = _chunked_pair_topk(An, Bn, keep, diagonal=False)
+            src = np.concatenate([ids_a[i1], ids_b[i2]])
+            dst = np.concatenate([ids_b[j1], ids_a[j2]])
+            cos = np.concatenate([_seq_cos(A, Bm, i1, j1, na, nb, d),
+                                  _seq_cos(Bm, A, i2, j2, nb, na, d)])
+        return pd.DataFrame({"src": src, "dst": dst, "cos_sim": cos})
+
+    return mem.groupBy("pid", "_diag").applyInPandas(kernel, schema)
+
+
 def knn_graph(
     df: DataFrame,
     k: int = 5,
@@ -491,16 +550,16 @@ def knn_graph(
     the substrate for mutual-kNN clustering, SemDeDup-style pruning, and
     graph-based ANN index construction.
 
-    Same distributed block-pair decomposition as
+    Same block-pair decomposition and ``_gram`` kernel as
     ``embedding_near_dup_pairs_fast``: rows hash into B blocks, each
-    unordered block pair is one ``applyInPandas`` group = one BLAS gram
-    slice, and each ordered node pair meets in exactly one group. Per
-    group every node keeps only its top ``k+pad`` candidates by matmul
-    score (pad absorbs the ~1e-12 matmul-vs-sequential reordering error
-    at the k boundary), so the candidate shuffle carries n·B·(k+pad)
-    ids — never vectors, never n². Candidates are then RESCORED with the
-    sequential index-fold dot and re-ranked globally, making the emitted
-    scores and ranks bit-identical to a brute-force oracle."""
+    unordered block pair is one group, and each ordered node pair meets
+    in exactly one group. Per group every node keeps only its top
+    ``k+pad`` candidates by matmul score (pad absorbs the ~1e-12
+    matmul-vs-sequential reordering error at the k boundary), each with
+    its exact sequential cosine, so the candidate shuffle carries
+    n·B·(k+pad) scored ids — never vectors, never n². A global re-rank
+    on the exact scores makes the emitted scores and ranks bit-identical
+    to a brute-force oracle."""
     return _knn_topk(knn_candidates(df, k + pad, id_col, vec_col,
                                     n_blocks, dim), k)
 
@@ -515,82 +574,13 @@ def knn_candidates(
 ) -> DataFrame:
     """Within-set SCORED candidate generation for the kNN graph: per
     node the top ``keep`` neighbors by matmul cosine from each
-    block-pair BLAS slice (each node pair meets in exactly one slice),
-    each kept pair carrying its EXACT sequential cosine computed in the
-    same worker (``_seq_cos`` — bit-identical to the plan-side
-    ``dot/(norm·norm)`` fold). Round 11 moved scoring in-pass: the old
-    ``_rescore`` stage joined every candidate row against the vector
-    table twice, attaching 512-byte vectors to ~n·B·keep rows — ~100 GB
-    of shuffle and a measured 20.9x third-decade exponent; in-worker
-    scoring ships only (src, dst, cos_sim). Callers rank with
+    block-pair group, each kept pair carrying its exact sequential
+    cosine (``_gram``'s ``keep`` mode). Callers rank with
     ``_knn_topk``. B defaults to the data-aware ``_auto_blocks`` (see
     its docstring for the exactness argument)."""
-    import numpy as np
-
-    spark = df.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     B = n_blocks or _auto_blocks(df.count(), n_part)
-
-    rows = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("_blk"),
-    )
-    pair_df = _block_grid(spark, B)
-    mem_a = rows.join(F.broadcast(pair_df), rows["_blk"] == pair_df["bx"]) \
-        .select("pid", F.lit("a").alias("_side"), "_id", "_vec")
-    mem_b = rows.join(F.broadcast(pair_df.filter("bx <> by")), rows["_blk"] == pair_df["by"]) \
-        .select("pid", F.lit("b").alias("_side"), "_id", "_vec")
-    mem = mem_a.unionByName(mem_b)
-
-    def find_candidates(pdf: pd.DataFrame) -> pd.DataFrame:
-        from quantum_rag_data_pipeline_spark.operators.alloctune import \
-            tune_worker_allocator
-        tune_worker_allocator()  # the kept-pair gathers are varied-size
-        empty = pd.DataFrame({"src": pd.Series(dtype="int64"),
-                              "dst": pd.Series(dtype="int64"),
-                              "cos_sim": pd.Series(dtype="float64")})
-        a = pdf[pdf["_side"] == "a"]
-        b = pdf[pdf["_side"] == "b"]
-        if len(a) == 0:
-            return empty
-        ids_a = a["_id"].to_numpy(dtype=np.int64)
-        A = np.stack(a["_vec"].to_numpy()).astype(np.float64)
-        An = A / np.linalg.norm(A, axis=1, keepdims=True)
-        d_eff = dim if dim is not None else A.shape[1]
-        na = _seq_norms(A, d_eff)
-
-        # Diagonality comes from the GROUP ID, not from len(b) (round 15
-        # hardening): pid = bx*B + by, so bx == by identifies the
-        # within-block group structurally. The old len(b)==0 inference
-        # silently re-ran the diagonal kernel for a CROSS group whose
-        # by-block happened to be empty — emitting that bx-block's
-        # within-pairs a second time and corrupting the downstream
-        # row_number ranks. Unreachable with _auto_blocks sizing (blocks
-        # carry ≥ ~512 expected rows), but an explicit small n_blocks
-        # with a skewed corpus could hit it.
-        pid = int(pdf["pid"].iloc[0])
-        if pid // B != pid % B:  # cross group
-            if len(b) == 0:
-                return empty
-            ids_b = b["_id"].to_numpy(dtype=np.int64)
-            Bm = np.stack(b["_vec"].to_numpy()).astype(np.float64)
-            Bn = Bm / np.linalg.norm(Bm, axis=1, keepdims=True)
-            nb = _seq_norms(Bm, d_eff)
-            i1, j1, i2, j2 = _chunked_pair_topk(An, Bn, keep, diagonal=False)
-            src = np.concatenate([ids_a[i1], ids_b[i2]])
-            dst = np.concatenate([ids_b[j1], ids_a[j2]])
-            cos = np.concatenate([_seq_cos(A, Bm, i1, j1, na, nb, d_eff),
-                                  _seq_cos(Bm, A, i2, j2, nb, na, d_eff)])
-        else:  # diagonal: within-block, self excluded
-            ii, jj = _chunked_pair_topk(An, An, keep, diagonal=True)
-            src, dst = ids_a[ii], ids_a[jj]
-            cos = _seq_cos(A, A, ii, jj, na, na, d_eff)
-        if len(src) == 0:
-            return empty
-        return pd.DataFrame({"src": src, "dst": dst, "cos_sim": cos})
-
-    return mem.groupBy("pid").applyInPandas(
-        find_candidates, "src long, dst long, cos_sim double")
+    return _gram(_membership([(df, None, B)], id_col, vec_col), dim, keep=keep)
 
 
 def _knn_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -605,82 +595,6 @@ def _knn_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cross_topk_candidates(
-    left: DataFrame,
-    right: DataFrame,
-    keep: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """Blocked cross-set SCORED candidate generation: per LEFT row the
-    top ``keep`` RIGHT rows by matmul cosine, and per RIGHT row the top
-    ``keep`` LEFT rows — both directions from ONE pass over the
-    B_L×B_R block-pair grid (each cross row pair is scored in exactly
-    one BLAS slice), each kept pair carrying its exact sequential
-    cosine (``_seq_cos``, bit-identical to the plan-side fold — see
-    ``knn_candidates`` for why scoring moved in-pass). The shuffle
-    carries (|L|+|R|)·B·keep scored id pairs, never vectors. Ids must
-    be disjoint across the two sides. B defaults to ``_auto_blocks`` on
-    the LARGER side (the B×B grid's per-group cost is bounded by the
-    bigger block)."""
-    import numpy as np
-
-    spark = left.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    B = n_blocks or _auto_blocks(max(left.count(), right.count()), n_part)
-
-    def tagged(df: DataFrame, side: str) -> DataFrame:
-        return df.select(
-            F.lit(side).alias("_side"),
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("_blk"),
-        )
-
-    grid = _block_grid(spark, B, full=True)
-    lrows, rrows = tagged(left, "a"), tagged(right, "b")
-    mem = (
-        lrows.join(F.broadcast(grid), lrows["_blk"] == grid["bx"])
-        .select("pid", "_side", "_id", "_vec")
-        .unionByName(
-            rrows.join(F.broadcast(grid), rrows["_blk"] == grid["by"])
-            .select("pid", "_side", "_id", "_vec")
-        )
-    )
-
-    def find(pdf: pd.DataFrame) -> pd.DataFrame:
-        from quantum_rag_data_pipeline_spark.operators.alloctune import \
-            tune_worker_allocator
-        tune_worker_allocator()  # the kept-pair gathers are varied-size
-        empty = pd.DataFrame({"src": pd.Series(dtype="int64"),
-                              "dst": pd.Series(dtype="int64"),
-                              "cos_sim": pd.Series(dtype="float64")})
-        a = pdf[pdf["_side"] == "a"]
-        b = pdf[pdf["_side"] == "b"]
-        if len(a) == 0 or len(b) == 0:
-            return empty
-        ids_a = a["_id"].to_numpy(dtype=np.int64)
-        ids_b = b["_id"].to_numpy(dtype=np.int64)
-        A = np.stack(a["_vec"].to_numpy()).astype(np.float64)
-        Bm = np.stack(b["_vec"].to_numpy()).astype(np.float64)
-        An = A / np.linalg.norm(A, axis=1, keepdims=True)
-        Bn = Bm / np.linalg.norm(Bm, axis=1, keepdims=True)
-        d_eff = dim if dim is not None else A.shape[1]
-        na, nb = _seq_norms(A, d_eff), _seq_norms(Bm, d_eff)
-        i1, j1, i2, j2 = _chunked_pair_topk(An, Bn, keep, diagonal=False)
-        return pd.DataFrame({
-            "src": np.concatenate([ids_a[i1], ids_b[i2]]),
-            "dst": np.concatenate([ids_b[j1], ids_a[j2]]),
-            "cos_sim": np.concatenate([
-                _seq_cos(A, Bm, i1, j1, na, nb, d_eff),
-                _seq_cos(Bm, A, i2, j2, nb, na, d_eff)]),
-        })
-
-    return mem.groupBy("pid").applyInPandas(
-        find, "src long, dst long, cos_sim double")
-
-
 def knn_graph_incremental(
     old_df: DataFrame,
     new_df: DataFrame,
@@ -691,34 +605,27 @@ def knn_graph_incremental(
     pad: int = 8,
 ) -> DataFrame:
     """INCREMENTAL k-NN graph maintenance: given the existing corpus and
-    a newly ingested batch, produce the full-corpus k-NN graph WITHOUT
-    re-scoring old×old pairs — the index-update path a vector store
-    runs on every ingest. Work is O(old·k) (stored edges re-ranked) +
-    one old×new cross pass + one new×new pass, vs O(n²) for a rebuild;
-    at 100 TB with a 1% daily batch that is a ~99% flop reduction.
+    a newly ingested batch, produce the full-corpus k-NN graph — the
+    index-update path a vector store runs on every ingest. Ids must be
+    disjoint across the two sides.
 
-    Correctness argument (verified by the parity query): an old node's
-    updated top-k ⊆ its previous top-k ∪ its top-(k+pad) among NEW
-    vectors; a new node's top-k ⊆ its per-side top-(k+pad) against old
-    and new. All candidates funnel through the same exact-rescore tail
-    as the batch build, so the result is bit-identical to
+    ONE ``_gram`` pass over one membership frame of three pid-namespaced
+    grids: old×old (self), old×new (cross, both directions) and new×new
+    (self). Every ordered pair of the union meets in exactly one group of
+    exactly one grid, so the candidates need no dedup, and one
+    ``_knn_topk`` ranks them on their exact scores. In production the
+    old×old grid is what the index store already holds: under the total
+    order (cos_sim desc, dst asc) the top-k of a union equals the top-k
+    of (the top-k of one part ∪ the rest), so stored old edges can stand
+    in for that grid unchanged, and the fresh work is O(old·new + new²)
+    instead of a rebuild's O(n²) — at a 1% daily batch a ~99% flop
+    reduction. Here the demo recomputes the old grid in the same pass so
+    the parity query is self-contained; the result is bit-identical to
     ``knn_graph(old ∪ new)``."""
-    keep = k + pad
-    # The stored index: old-graph top-k edges with their exact scores. In
-    # production these are READ from the index store; the demo rebuilds
-    # them so the parity query is self-contained. Scores stay unrounded
-    # so stored and fresh edges rank on the same exact values.
-    # Block counts come from _auto_blocks (data-aware), but computed HERE
-    # and passed down explicitly: the three candidate stages (old, cross,
-    # new) would otherwise each count() their caller-supplied inputs —
-    # up to 4 executions of possibly expensive derived plans per call.
-    # One count per side funds all three stages.
     n_part = int(old_df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    # ONE job for both side counts (round 14): the two .count() calls were
-    # two job submissions, each a separate pass over its side; a tagged
-    # union aggregates both in a single action (same two scans, one job —
-    # per-query job latency is the measurable cost at bench scale, one
-    # fewer pass-coordination at cluster scale).
+    # ONE job counts both sides (round 14): two .count() calls were two
+    # job submissions; a tagged union aggregates both in a single action.
+    # The counts size all three grids, so no grid counts its input again.
     side_counts = {
         r["_side"]: r["c"]
         for r in old_df.select(F.lit(0).alias("_side"))
@@ -728,26 +635,13 @@ def knn_graph_incremental(
         .collect()
     }
     n_old, n_new = side_counts.get(0, 0), side_counts.get(1, 0)
-    b_old = _auto_blocks(n_old, n_part)
-    b_new = _auto_blocks(n_new, n_part)
-    b_cross = _auto_blocks(max(n_old, n_new), n_part)
-    old_scored = knn_candidates(old_df, keep, id_col, vec_col,
-                                n_blocks=b_old, dim=dim)
-    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), F.col("dst").asc())
-    stored = (
-        old_scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k).select("src", "dst", "cos_sim")
-    )
-    # Fresh work — the only scoring the incremental update pays for:
-    # old×new both directions + new×new, each pair scored exactly in
-    # the worker that computed its gram slice (see knn_candidates).
-    fresh_scored = cross_topk_candidates(old_df, new_df, keep, id_col, vec_col,
-                                         n_blocks=b_cross, dim=dim) \
-        .unionByName(knn_candidates(new_df, keep, id_col, vec_col,
-                                    n_blocks=b_new, dim=dim))
-    # Branches are pairwise disjoint (old->old vs old->new vs new->old vs
-    # new->new), so the union needs no dedup before the final top-k.
-    return _knn_topk(stored.unionByName(fresh_scored), k)
+    grids = [
+        (old_df, None, _auto_blocks(n_old, n_part)),
+        (old_df, new_df, _auto_blocks(max(n_old, n_new), n_part)),
+        (new_df, None, _auto_blocks(n_new, n_part)),
+    ]
+    return _knn_topk(_gram(_membership(grids, id_col, vec_col), dim,
+                           keep=k + pad), k)
 
 
 def embedding_near_dup_pairs(
@@ -1215,11 +1109,11 @@ def semdedup_prune(
     an independent shuffle-partition-local task).
 
     E-step reuses ``assign_to_centroids`` (broadcast centroids, one
-    shuffle carrying (id, cluster) only); the intra-cluster pair scan
-    reuses ``embedding_near_dup_pairs(block_col='centroid_id')``. A row
-    is REMOVED when a lower-id member of the same cluster sits within
-    ``threshold`` cosine — keep-lowest-id is SemDeDup's deterministic
-    representative rule.
+    shuffle carrying (id, cluster) only); the intra-cluster pair scan is
+    the shared ``_gram`` kernel with each cluster as one diagonal group,
+    then an exact rescore. A row is REMOVED when a lower-id member of
+    the same cluster sits within ``threshold`` cosine — keep-lowest-id
+    is SemDeDup's deterministic representative rule.
 
     Returns (id, centroid_id, removed) — the per-document verdict frame
     a curation pipeline anti-joins against the corpus.
@@ -1227,61 +1121,33 @@ def semdedup_prune(
     Family conventions (shared with embedding_near_dup_pairs_fast): the
     BLAS prefilter requires integral ``id_col`` values (materialized as
     int64 in the per-cluster batch) and scores the first ``dim``
-    components only — vectors are sliced to ``[:dim]`` so the prefilter
-    matches the dim-bounded exact rescore."""
+    components only, so it matches the dim-bounded exact rescore."""
     # two consumers (the members join and the final verdict join) would
     # re-run the whole E-step — two broadcast builds + the scored
     # cross-join — per invocation; cache() materializes the (id, cluster)
     # table once. It is the artifact a production SemDeDup run persists
     # anyway (n rows x 16 bytes — the smallest frame in the pipeline).
     # Same CacheManager lifetime caveat as ngram_jaccard_pairs.
-    import numpy as np
-
     assigned = assign_to_centroids(
         vectors, centroids, dim, id_col=id_col, vec_col=vec_col
     ).select(id_col, "centroid_id").cache()
     members = assigned.join(vectors.select(id_col, vec_col), id_col)
-    # Intra-cluster scan as ONE BLAS call per cluster (round 10): the
-    # clusters are natural applyInPandas groups, so the row-wise blocked
-    # self-join (vectors riding the exchange, one unrolled dot per pair)
-    # becomes a normalized gram matrix per group — the same prefilter +
-    # exact-rescore shape as embedding_near_dup_pairs_fast, with the
-    # diagonal-only case because pairs never cross clusters. The rescore
-    # recomputes candidates with the sequential unrolled dot at the TRUE
-    # threshold, so verdicts are bit-identical to the row-wise operator
-    # (the 1e-6 margin absorbs matmul reordering error). Cluster size is
-    # bounded by construction — SemDeDup scales k with n precisely so
-    # groups stay matmul-sized; a pathologically skewed cluster is the
-    # caller's k choice, not a shuffle artifact.
-    thr = threshold - 1e-6
-
-    def _cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        from quantum_rag_data_pipeline_spark.operators.alloctune import \
-            tune_worker_allocator
-        tune_worker_allocator()  # varied-size per-cluster grams re-fault
-        empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                              "id_b": pd.Series(dtype="int64")})
-        if len(pdf) < 2:
-            return empty
-        ids = pdf["_id"].to_numpy(dtype=np.int64)
-        # truncate at dim like the exact rescore below — a vector longer
-        # than dim must not be prefiltered on components the dim-bounded
-        # rescore (and the row-wise path) never sees.
-        V = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)[:, :dim]
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        ii, jj = np.nonzero(np.triu(Vn @ Vn.T >= thr, k=1))
-        if len(ii) == 0:
-            return empty
-        la, lb = ids[ii], ids[jj]
-        return pd.DataFrame({"id_a": np.minimum(la, lb),
-                             "id_b": np.maximum(la, lb)})
-
-    cand = (
-        members.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
-                       "centroid_id")
-        .groupBy("centroid_id")
-        .applyInPandas(_cluster_pairs, "id_a long, id_b long")
-    )
+    # Intra-cluster scan as one ``_gram`` pass (round 10): the clusters
+    # are natural groups, so the row-wise blocked self-join (vectors
+    # riding the exchange, one fold dot per pair) becomes a normalized
+    # gram per cluster — each cluster one DIAGONAL group, because pairs
+    # never cross clusters. The rescore below recomputes candidates with
+    # the sequential fold dot at the TRUE threshold, so verdicts are
+    # bit-identical to the row-wise operator (the 1e-6 margin absorbs
+    # matmul reordering error). Cluster size is bounded by construction
+    # — SemDeDup scales k with n precisely so groups stay matmul-sized; a
+    # pathologically skewed cluster is the caller's k choice, not a
+    # shuffle artifact.
+    cand = _gram(
+        members.select(F.col("centroid_id").alias("pid"), F.lit(True).alias("_diag"),
+                       F.lit("a").alias("_side"), F.col(id_col).alias("_id"),
+                       F.col(vec_col).alias("_vec")),
+        dim, threshold=threshold - 1e-6)
     vecs = vectors.select(F.col(id_col), F.col(vec_col),
                           norm(F.col(vec_col), dim).alias("_n"))
     # rescore-join strategy is SIZE-ADAPTIVE (round-11 judge item 2):

@@ -1495,6 +1495,9 @@ def functional_dependency_profile(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.lit(rhs).alias("rhs"), "n_rows", "n_lhs_groups",
                 "n_violations", "fd_strength", "holds_exactly",
             )
+            # a global agg emits one row even over an empty table; the
+            # oracle's GROUP BY emits none
+            .where(F.col("n_rows").isNotNull())
         )
     out = parts[0]
     for p in parts[1:]:

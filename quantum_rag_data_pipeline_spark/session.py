@@ -14,6 +14,11 @@ One place to pin the session semantics the whole engine depends on:
   makes the same plan work at sf0.001 locally and at 100 TB on a cluster.
 - **Arrow on** — every pandas UDF moves data in Arrow batches, not pickled
   rows.
+- **The package ships to the Python workers** — pandas UDF closures import
+  engine modules on the worker, so the package is zipped once per process
+  and ``addPyFile``'d once per SparkContext: queries then run from any
+  working directory without ``PYTHONPATH``, and on a cluster whose
+  executors never had the package installed.
 """
 
 from __future__ import annotations
@@ -21,6 +26,31 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _ship_package(sc) -> None:
+    """``addPyFile`` the package zip unless ``sc`` already has it. The
+    zip holds the package's .py files and is built once per process, in
+    the process's artifact root (removed at exit)."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    name = os.path.basename(pkg) + ".zip"
+    if any(f.rsplit("/", 1)[-1] == name for f in sc.listFiles):
+        return
+    from quantum_rag_data_pipeline_spark.paths import artifact_root
+
+    out = os.path.join(artifact_root(), name)
+    if not os.path.exists(out):
+        import zipfile
+
+        with zipfile.ZipFile(out + ".tmp", "w") as z:
+            for dirpath, dirnames, files in os.walk(pkg):
+                dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+                for f in files:
+                    if f.endswith(".py"):
+                        full = os.path.join(dirpath, f)
+                        z.write(full, os.path.relpath(full, os.path.dirname(pkg)))
+        os.replace(out + ".tmp", out)
+    sc.addPyFile(out)
 
 
 def get_spark(
@@ -68,7 +98,9 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _ship_package(spark.sparkContext)
+    return spark
 
 
 class cache_scope:

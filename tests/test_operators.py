@@ -2,6 +2,8 @@
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from quantum_rag_data_pipeline_spark.operators import aggregates as agg_ops
@@ -370,36 +372,68 @@ def test_connected_components_local_vs_distributed_parity(spark):
     assert local == dist and len(local) > 0
 
 
-def test_knn_graph_exact_with_forced_empty_blocks(spark):
-    """Group-mode dispatch must come from the pid, not from len(b)
-    (round-15 hardening): with n_blocks forced far above the row count,
-    most blocks are EMPTY and cross groups (x, y) with an empty y-block
-    arrive b-less — the old inference re-ran the diagonal kernel there
-    and duplicated block-x's within-pairs, corrupting the ranks. Pin
-    knn_graph against brute force across block counts that guarantee
-    empty blocks."""
+@pytest.mark.parametrize("B", [5, 8])
+@pytest.mark.parametrize("mode", ["knn_graph", "near_dup", "incremental"])
+def test_gram_kernel_exact_with_forced_empty_blocks(spark, monkeypatch, mode, B):
+    """Every mode of the shared blocked-gram kernel against brute force,
+    with the block count forced far above the row count: 12 rows into
+    5/8 blocks leave blocks EMPTY, so cross groups (x, y) with an empty
+    y-block arrive b-less. Diagonality must come from the group key, not
+    from len(b) (round-15 hardening) — inferring it re-ran the diagonal
+    kernel there and duplicated block-x's within-pairs, corrupting kNN
+    ranks and near-dup pair multiplicity. Modes: the kNN graph (top-keep
+    with exact scores), near-dup pairs ≥ τ (threshold mode), and the
+    incremental kNN update, whose old×old, old×new and new×new grids
+    share one pass."""
     import random
-
-    import numpy as np
 
     from quantum_rag_data_pipeline_spark.operators import similarity as sim
 
     random.seed(3)
     rows = [(i, [random.random() for _ in range(8)]) for i in range(12)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    V = np.array([r[1] for r in rows])
-    ids = [r[0] for r in rows]
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    G = Vn @ Vn.T
+
+    def seq_cos(a, b):  # the engine's sequential fold, op for op
+        d = na = nb = 0.0
+        for x, y in zip(a, b):
+            d, na, nb = d + x * y, na + x * x, nb + y * y
+        return d / (math.sqrt(na) * math.sqrt(nb))
+
+    cos = {(i, j): seq_cos(rows[i][1], rows[j][1])
+           for i in range(12) for j in range(12) if i != j}
+    if mode == "near_dup":
+        tau = 0.8
+        exp = {(i, j) for (i, j), c in cos.items() if i < j and c >= tau}
+        assert 0 < len(exp) < 66  # the threshold splits the pairs
+        out = sim.embedding_near_dup_pairs_fast(df, dim=8, threshold=tau, n_blocks=B)
+        got = [(r["id_a"], r["id_b"]) for r in out.collect()]
+        assert len(got) == len(set(got)), "a pair was emitted twice"
+        assert set(got) == exp, sorted(set(got) ^ exp)[:6]
+        return
     exp = set()
     for i in range(12):
-        order = sorted((-(G[i, j]), ids[j]) for j in range(12) if j != i)[:3]
-        for rnk, (_negc, j) in enumerate(order, 1):
-            exp.add((ids[i], j, rnk))
-    for B in (5, 8):  # 12 rows into 5/8 blocks -> empty blocks guaranteed-ish
+        order = sorted((-cos[i, j], j) for j in range(12) if j != i)[:3]
+        exp |= {(i, j, rnk) for rnk, (_negc, j) in enumerate(order, 1)}
+    if mode == "knn_graph":
         out = sim.knn_graph(df, k=3, dim=8, n_blocks=B)
-        got = {(r["src"], r["dst"], r["rnk"]) for r in out.collect()}
-        assert got == exp, f"B={B}: {sorted(got ^ exp)[:6]}"
+    else:
+        monkeypatch.setattr(sim, "_auto_blocks", lambda *a, **kw: B)
+        out = sim.knn_graph_incremental(df.filter("vec_id % 3 != 0"),
+                                        df.filter("vec_id % 3 = 0"), k=3, dim=8)
+    got = [(r["src"], r["dst"], r["rnk"]) for r in out.collect()]
+    assert len(got) == len(set(got)) == 36
+    assert set(got) == exp, sorted(set(got) ^ exp)[:6]
+
+
+def test_knn_graph_incremental_is_one_gram_pass(spark, sf_dir):
+    """The incremental kNN update is one membership frame over three
+    pid-namespaced grids, so its plan runs the gram kernel ONCE (it was
+    three passes: old candidates, the old×new cross pass, new×new)."""
+    from quantum_rag_data_pipeline_spark.queries import QUERIES
+
+    df = QUERIES["knn_graph_incremental_parity"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
 
 
 def test_connected_components_local_path_is_jvm_local_relation(spark):
@@ -425,6 +459,57 @@ def test_connected_components_local_path_is_jvm_local_relation(spark):
     assert "LocalTableScan" in plan, plan
     assert {(r["node"], r["cluster_id"]) for r in out.collect()} == {
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+
+
+def test_connected_components_empty_graph_without_arrow(spark):
+    """The local union-find path must return a TYPED empty frame for an
+    empty edge list in any session config: without Arrow, a schema-less
+    createDataFrame of an empty pandas frame cannot infer a schema."""
+    from quantum_rag_data_pipeline_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        out = connected_components(edges)
+        assert out.collect() == []
+        assert out.schema.simpleString() == "struct<node:bigint,cluster_id:bigint>"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_functional_dependency_profile_matches_oracle_on_empty_tables(spark, sf_dir, tmp_path):
+    """An empty input table contributes no candidate row, exactly like
+    the DuckDB oracle's GROUP BY (a global aggregate would emit one
+    all-null row per empty table). Nation keeps its rows, so one
+    candidate survives."""
+    import os
+    import sys
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from quantum_rag_data_pipeline_spark.queries import ORACLE, QUERIES
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+    from oracle_check import table_hash
+
+    con = duckdb.connect()
+    for t in ("nation", "customer", "orders", "lineitem", "events"):
+        src = pq.read_table(f"{sf_dir}/{t}.parquet")
+        pq.write_table(src if t == "nation" else src.schema.empty_table(),
+                       str(tmp_path / f"{t}.parquet"))
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')")
+    name = "functional_dependency_profile"
+    sdf = QUERIES[name](spark, str(tmp_path))
+    scols = sdf.columns
+    srows = [tuple(d[c] for c in scols) for d in sdf.toArrow().to_pylist()]
+    dtab = con.execute(ORACLE[name]).arrow()
+    dcols = list(dtab.schema.names)
+    drows = [tuple(d[c] for c in dcols) for d in dtab.to_pylist()]
+    assert len(srows) == len(drows) == 1, (srows, drows)
+    assert table_hash(scols, srows) == table_hash(dcols, drows), (srows, drows)
 
 
 def test_curation_split_deterministic_and_complete(spark):
