@@ -12,6 +12,12 @@ this plan is ONE lazy DataFrame DAG over all days:
       → derived renewables (P8) → 11-line sentence (U2, pure expression)
       → pandas_udf embedding (U1) → parquet/JDBC upsert by vector_id (K1)
 
+The DAG runs once per call. Its inputs (the envelopes and the day spine)
+are JVM local relations, so no stage waits on Python workers except the
+embedding UDF, and ``run_daily_summary_pipeline`` takes its row count from
+an ``Observation`` that rides the upsert's write instead of re-running
+the DAG with a second action.
+
 At 100 TB the only changes are at the edges: envelopes land as
 date-partitioned JSON files read by ``envelope_files_to_df`` (partition
 pruning + parallel parse), and the sink becomes the JDBC upsert writer.
@@ -24,12 +30,13 @@ from __future__ import annotations
 
 from datetime import date, timedelta
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quantum_rag_data_pipeline_spark.functions.embedding import make_embed_udf, scrubbed_for_embedding
 from quantum_rag_data_pipeline_spark.functions.formatting import semantic_sentence
-from quantum_rag_data_pipeline_spark.sources.ercot import ErcotQueries, envelope_to_df
+from quantum_rag_data_pipeline_spark.sources.ercot import ErcotQueries
 
 #: the fixed metric catalog (reference src/main.py:101-108,122-125,
 #: 140-144,159-162,180-183,203-205): endpoint → [(field, method, alias)]
@@ -147,8 +154,11 @@ def build_daily_summaries(
     # sentence still renders (src/main.py + sentence_builder N/A paths).
     # Only a day with data from NO endpoint at all is aborted — the
     # reference's fetch-returned-None case.
+    # (a JVM local relation, like the envelopes: see sources.ercot)
+    windows = day_windows(start, end)
     days = spark.createDataFrame(
-        [(a, b) for a, b in day_windows(start, end)], "date_from string, date_to string"
+        pa.table({"date_from": [a for a, _ in windows], "date_to": [b for _, b in windows]}),
+        "date_from string, date_to string",
     )
     joined = days
     markers = []
@@ -215,10 +225,13 @@ def run_daily_summary_pipeline(
 ) -> int:
     """End-to-end: build + upsert. Returns the number of summary rows.
     Idempotent: re-running any window leaves the sink unchanged modulo
-    updated_at (K1 semantics)."""
-    from quantum_rag_data_pipeline_spark.sinks.upsert import parquet_upsert
+    updated_at (K1 semantics).
+
+    The DAG runs once: the row count is an ``Observation`` that rides the
+    upsert's write (``sinks.upsert.observed_upsert``), not a second action
+    that would re-run every aggregate, the embedding and the sink merge."""
+    from quantum_rag_data_pipeline_spark.sinks.upsert import observed_upsert
 
     rows = build_daily_summaries(spark, queries, weather_daily_avg, start, end, encoder, embed_dim)
     out = rows.select("vector_id", "embedding", "semantic_sentence", "updated_at")
-    parquet_upsert(spark, out, sink_path, ["vector_id"], version_col="updated_at")
-    return out.count()
+    return observed_upsert(spark, out, sink_path, ["vector_id"], version_col="updated_at")["attempted"]

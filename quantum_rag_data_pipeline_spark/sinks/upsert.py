@@ -72,7 +72,7 @@ def observed_upsert(
     Spark-first — an ``Observation`` rides the write (zero extra pass; the
     reference re-iterates results to count). ``validity_col`` is a boolean
     column marking rows the sink will accept; invalid rows are filtered
-    out and counted."""
+    out and counted. An empty input tallies 0 in every count."""
     from pyspark.sql import Observation
 
     obs = Observation("sink_tally")
@@ -80,11 +80,17 @@ def observed_upsert(
     observed = new_rows.observe(
         obs,
         F.count(F.lit(1)).alias("attempted"),
-        F.sum(F.when(valid, 1).otherwise(0)).alias("succeeded"),
-        F.sum(F.when(~valid, 1).otherwise(0)).alias("failed"),
+        F.count(F.when(valid, 1)).alias("succeeded"),
+        F.count(F.when(~valid, 1)).alias("failed"),
     )
     to_write = observed.filter(valid).drop(*([validity_col] if validity_col else []))
     parquet_upsert(spark, to_write, path, key_cols, version_col)
+    # An input with no partitions (an empty local relation) runs no task
+    # under the merge's shuffle, and AQE drops that stage together with its
+    # metrics node: the write then completes with no metrics at all, which
+    # can only mean no row was observed.
+    if obs._jo.getRow().length() == 0:
+        return {"attempted": 0, "succeeded": 0, "failed": 0}
     return obs.get
 
 

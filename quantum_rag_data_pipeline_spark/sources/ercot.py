@@ -11,7 +11,10 @@ Spark-first re-expression:
   are tiny (page size 100, reference ``queries.py:41-42``);
 - ``envelope_to_df`` turns the envelope into a proper DataFrame: the
   ``fields`` header becomes the schema, records become rows, and ALL
-  values land as strings to be permissively cast downstream (P2);
+  values land as strings to be permissively cast downstream (P2). The
+  frame is a JVM local relation built from an Arrow table, not a pickled
+  Python RDD: every job that reads the envelope then scans it inside the
+  JVM instead of waiting on Python workers to unpickle the rows;
 - at 100 TB the same envelope shape would be landed as JSON files and
   read with ``spark.read.json`` — ``envelope_files_to_df`` does exactly
   that, giving partitioned parallel ingest with predicate pushdown on
@@ -34,6 +37,7 @@ import time
 from collections.abc import Callable, Sequence
 from typing import Any, Protocol
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -130,16 +134,24 @@ def envelope_to_df(spark: SparkSession, envelope: dict) -> DataFrame:
     string (permissive cast happens downstream with try_cast, preserving
     the reference's drop-bad-cells semantics). Records shorter than the
     header are right-padded with NULLs (reference skips those cells,
-    ``src/main.py:74``)."""
+    ``src/main.py:74``).
+
+    The cells reach the JVM as one Arrow table of string columns, which
+    plans as a ``LocalTableScan`` (see the module docstring). A
+    header-less envelope keeps one zero-column row per record, through
+    ``spark.range``."""
     names = [f["name"] for f in envelope.get("fields", [])]
+    records = envelope.get("data", [])
+    if not names:
+        return spark.range(len(records)).select()
     schema = StructType([StructField(n, StringType(), True) for n in names])
-    width = len(names)
-    rows = []
-    for rec in envelope.get("data", []):
-        vals = [None if v is None else str(v) for v in rec[:width]]
-        vals += [None] * (width - len(vals))
-        rows.append(tuple(vals))
-    return spark.createDataFrame(rows, schema)
+    cols: list[list[str | None]] = [[] for _ in names]
+    for rec in records:
+        for j, col in enumerate(cols):
+            v = rec[j] if j < len(rec) else None
+            col.append(None if v is None else str(v))
+    table = pa.Table.from_arrays([pa.array(c, pa.string()) for c in cols], names=names)
+    return spark.createDataFrame(table, schema)
 
 
 def envelope_files_to_df(spark: SparkSession, path: str) -> DataFrame:

@@ -16,6 +16,7 @@ import random
 from collections.abc import Iterable
 from datetime import date, datetime, timedelta
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,28 +50,35 @@ def _det_temp(city: str, when: str) -> float | None:
 
 def fake_daily_weather(spark: SparkSession, start: str, end: str) -> DataFrame:
     """S11 fake: per (city, date) daily tavg, schema
-    (city STRING, date DATE, tavg DOUBLE) — NULL tavg = missing reading."""
+    (city STRING, date DATE, tavg DOUBLE) — NULL tavg = missing reading.
+    Like the ERCOT envelopes, the fakes are JVM local relations built from
+    an Arrow table (see ``sources.ercot.envelope_to_df``)."""
     d0 = date.fromisoformat(start)
     d1 = date.fromisoformat(end)
-    rows = []
+    cols: dict[str, list] = {"city": [], "date": [], "tavg": []}
     d = d0
     while d <= d1:
         for city in CITIES:
-            rows.append((city, d, _det_temp(city, d.isoformat())))
+            cols["city"].append(city)
+            cols["date"].append(d)
+            cols["tavg"].append(_det_temp(city, d.isoformat()))
         d += timedelta(days=1)
-    return spark.createDataFrame(rows, "city string, date date, tavg double")
+    return spark.createDataFrame(pa.table(cols), "city string, date date, tavg double")
 
 
 def fake_hourly_weather(spark: SparkSession, day: str, cities: Iterable[str] = HOURLY_CITIES) -> DataFrame:
     """S12 fake: per (city, hour) readings, schema
-    (city STRING, time TIMESTAMP, temp_c DOUBLE)."""
+    (city STRING, time TIMESTAMP, temp_c DOUBLE); the naive hours are
+    read in the session time zone (UTC, see ``session``)."""
     base = datetime.fromisoformat(f"{day}T00:00:00")
-    rows = []
+    cols: dict[str, list] = {"city": [], "time": [], "temp_c": []}
     for city in cities:
         for h in range(24):
             t = base + timedelta(hours=h)
-            rows.append((city, t, _det_temp(city, t.isoformat())))
-    return spark.createDataFrame(rows, "city string, time timestamp, temp_c double")
+            cols["city"].append(city)
+            cols["time"].append(t)
+            cols["temp_c"].append(_det_temp(city, t.isoformat()))
+    return spark.createDataFrame(pa.table(cols), "city string, time timestamp, temp_c double")
 
 
 def daily_avg_temperature(daily: DataFrame) -> DataFrame:

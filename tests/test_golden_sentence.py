@@ -4,8 +4,10 @@ through the full pipeline — fixture envelopes → aggregate → join →
 sentence → fake embedding → upsert."""
 
 import math
+import uuid
 
 import pytest
+from plan_checks import assert_no_python_rdd_scan
 from pyspark.sql import functions as F
 
 from quantum_rag_data_pipeline_spark.plans.daily_summary import (
@@ -13,6 +15,7 @@ from quantum_rag_data_pipeline_spark.plans.daily_summary import (
     build_daily_summaries,
     run_daily_summary_pipeline,
 )
+from quantum_rag_data_pipeline_spark.sinks.upsert import parquet_upsert
 from quantum_rag_data_pipeline_spark.sources.ercot import ENDPOINTS, ErcotQueries
 
 GOLDEN = """ISO: ERCOT
@@ -136,3 +139,64 @@ def test_pipeline_upsert_idempotent(spark, golden_queries, tmp_path):
     second = {r["vector_id"]: r["semantic_sentence"] for r in spark.read.parquet(sink).collect()}
     assert n1 == n2 == 1
     assert first == second  # same sink state modulo updated_at (K1)
+
+
+def test_built_summary_scans_no_python_rdd(spark, golden_queries):
+    """Envelopes, the day spine and the fake weather are JVM local
+    relations: after the build runs, the only Python stage in its plan is
+    the embedding UDF."""
+    from quantum_rag_data_pipeline_spark.sources.weather import (
+        daily_avg_temperature,
+        fake_daily_weather,
+    )
+
+    weather = daily_avg_temperature(fake_daily_weather(spark, "2025-05-08", "2025-05-09"))
+    df = build_daily_summaries(
+        spark, golden_queries, weather, "2025-05-08", "2025-05-09", embed_dim=8
+    )
+    df.collect()
+    plan = assert_no_python_rdd_scan(df)
+    assert "ArrowEvalPython" in plan, plan
+    assert "BatchEvalPython" not in plan, plan
+
+
+class EmptyClient:
+    """Every endpoint answers with its header and no records."""
+
+    def get_data(self, endpoint: str, params: dict) -> dict:
+        fields = TARGETS[ENDPOINT_BY_ROUTE[endpoint]]
+        return {"fields": [{"name": f} for f in fields], "data": []}
+
+
+def _jobs_of(spark, fn):
+    """``fn()`` under a fresh job group; returns (its result, its job count)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pipeline_runs_its_dag_once(spark, golden_queries, tmp_path):
+    """The row count rides the upsert's write: a pipeline call runs exactly
+    the jobs of a bare upsert of the same built frame (a closing count()
+    re-ran the whole DAG, doubling them). A window in which every endpoint
+    is empty returns 0 and writes no rows."""
+    args = (spark, golden_queries, _weather(spark), "2025-05-08", "2025-05-09")
+    n, pipeline_jobs = _jobs_of(
+        spark, lambda: run_daily_summary_pipeline(*args, str(tmp_path / "sink"), embed_dim=8))
+    built = build_daily_summaries(*args, embed_dim=8).select(
+        "vector_id", "embedding", "semantic_sentence", "updated_at")
+    _, upsert_jobs = _jobs_of(spark, lambda: parquet_upsert(
+        spark, built, str(tmp_path / "bare"), ["vector_id"], version_col="updated_at"))
+    assert n == 1
+    assert pipeline_jobs == upsert_jobs > 0
+
+    empty = str(tmp_path / "empty")
+    assert run_daily_summary_pipeline(
+        spark, ErcotQueries(spark, EmptyClient()), None, "2025-05-08", "2025-05-10", empty,
+        embed_dim=8) == 0
+    assert spark.read.parquet(empty).count() == 0

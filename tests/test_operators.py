@@ -6,6 +6,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from plan_checks import assert_no_python_rdd_scan
+
 from quantum_rag_data_pipeline_spark.operators import aggregates as agg_ops
 from quantum_rag_data_pipeline_spark.operators import projection as proj_ops
 from quantum_rag_data_pipeline_spark.operators.dedup import (
@@ -43,6 +45,29 @@ def test_p2_permissive_cast_drops_bad_cells(spark):
     row = out.collect()[0]
     assert row["sx"] == 5.0 and row["cx"] == 2  # 1 + 4; "N/A"/None dropped
     assert row["sy"] == 5.5  # 2.5 + 3; short records padded with NULL
+
+
+@pytest.mark.parametrize("env, schema, rows", [
+    ({}, "struct<>", []),
+    # header-less: one zero-column row per record
+    ({"fields": [], "data": [[1], ["x", 2], []]}, "struct<>", [(), (), ()]),
+    ({"fields": [{"name": "a"}, {"name": "b"}]}, "struct<a:string,b:string>", []),
+    ({"fields": [{"name": "a"}, {"name": "b"}], "data": []}, "struct<a:string,b:string>", []),
+    # short records pad with NULL, long ones are cut, every cell is str()
+    ({"fields": [{"name": "a"}, {"name": "b"}, {"name": "c"}],
+      "data": [[1.5, None, "N/A"], ["x"], [1, 2, 3, 4], [], [True, 0.1]]},
+     "struct<a:string,b:string,c:string>",
+     [("1.5", None, "N/A"), ("x", None, None), ("1", "2", "3"), (None, None, None),
+      ("True", "0.1", None)]),
+], ids=["empty", "no-fields", "header-only", "header-empty-data", "short-and-long"])
+def test_envelope_to_df_is_a_jvm_local_relation(spark, env, schema, rows):
+    """Every envelope shape, degenerate ones included, keeps its schema,
+    rows and count and plans without a Python-RDD scan."""
+    df = envelope_to_df(spark, env)
+    assert df.schema.simpleString() == schema
+    assert [tuple(r) for r in df.collect()] == rows
+    assert df.count() == len(rows)
+    assert_no_python_rdd_scan(df)
 
 
 def test_a1_empty_values_yield_zero(spark):
@@ -116,6 +141,27 @@ def test_weather_daily_avg_and_wide_table(spark):
     present = [v for v in present if v is not None]
     assert abs(w0["avg_temperature_c"] - sum(present) / len(present)) < 1e-9
     assert abs(w0["avg_temperature_f"] - (w0["avg_temperature_c"] * 9 / 5 + 32)) < 1e-9
+
+
+def test_weather_fakes_are_jvm_local_relations(spark):
+    """The fake weather sources keep their rows (dates; naive hours read
+    as UTC by the pinned session) and plan without a Python-RDD scan."""
+    from datetime import date, timedelta
+
+    from quantum_rag_data_pipeline_spark.sources.weather import CITIES, HOURLY_CITIES, _det_temp
+
+    daily = fake_daily_weather(spark, "2025-05-01", "2025-05-03")
+    days = [date(2025, 5, 1) + timedelta(days=i) for i in range(3)]
+    assert [tuple(r) for r in daily.collect()] == [
+        (c, d, _det_temp(c, d.isoformat())) for d in days for c in CITIES]
+    hourly = fake_hourly_weather(spark, "2025-05-01")
+    t0 = 1746057600  # 2025-05-01T00:00:00Z, in seconds
+    got = hourly.select("city", F.unix_micros("time"), "temp_c").collect()
+    assert [tuple(r) for r in got] == [
+        (c, (t0 + 3600 * h) * 10**6, _det_temp(c, f"2025-05-01T{h:02d}:00:00"))
+        for c in HOURLY_CITIES for h in range(24)]
+    for df in (daily, hourly):
+        assert_no_python_rdd_scan(df)
 
 
 def test_exact_dedup_keeps_lowest_id(spark):
@@ -444,18 +490,11 @@ def test_connected_components_local_path_is_jvm_local_relation(spark):
     pipeline's save stage read 69.6 s summed runTime at 0.3 s CPU —
     pure worker wait). Pin that the local path's plan contains no
     Python-RDD scan."""
-    import contextlib
-    import io
-
     from quantum_rag_data_pipeline_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["src", "dst"])
     out = connected_components(edges)  # 3 edges → gated local path
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "applySchemaToPythonRDD" not in plan, plan
+    plan = assert_no_python_rdd_scan(out)
     assert "LocalTableScan" in plan, plan
     assert {(r["node"], r["cluster_id"]) for r in out.collect()} == {
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}

@@ -85,3 +85,24 @@ def test_observed_upsert_tally(spark, tmp_path):
     assert tally == {"attempted": 3, "succeeded": 2, "failed": 1}
     stored = {r["id"] for r in spark.read.parquet(path).collect()}
     assert stored == {"a", "b"}
+
+
+def test_observed_upsert_tally_of_empty_inputs(spark, tmp_path):
+    """An empty input tallies zeros, whether it is a Python-RDD scan, whose
+    tasks still report the observation, or an empty local relation, which
+    runs no task under the merge's shuffle and so reports no metrics."""
+    import pyarrow as pa
+
+    from quantum_rag_data_pipeline_spark.sinks.upsert import observed_upsert
+
+    schema = "id string, ok boolean"
+    inputs = {
+        "rdd": spark.createDataFrame([], schema),
+        "local": spark.createDataFrame(
+            pa.table({"id": pa.array([], pa.string()), "ok": pa.array([], pa.bool_())}), schema),
+    }
+    for name, df in inputs.items():
+        path = str(tmp_path / name)
+        tally = observed_upsert(spark, df, path, ["id"], validity_col="ok")
+        assert tally == {"attempted": 0, "succeeded": 0, "failed": 0}, name
+        assert spark.read.parquet(path).count() == 0
