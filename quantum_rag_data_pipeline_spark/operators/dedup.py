@@ -307,12 +307,12 @@ def minhash_lsh_pairs(
     # exchange reuse does NOT unify them (executed plan shows 0
     # ReusedExchange — the branches wrap the agg in different projections
     # before their own shuffles), so without materialization the
-    # explode + 128-way grouped-min lineage runs 3x. cache() computes it
-    # once inside the same action (no eager planning, unlike
-    # localCheckpoint). Lifetime caveat as in ngram_jaccard_pairs: the
-    # entry persists until clearCache — harnesses running many queries
-    # per session must clear periodically.
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, n).cache()
+    # explode + 128-way grouped-min lineage runs 3x. localCheckpoint
+    # computes it once (its shuffle runs at this call, under AQE) and keeps
+    # it out of the session's CacheManager, whose entries match later plans
+    # by plan, not by data: a later call over a path rewritten in between
+    # would get the old file's signatures.
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, n).localCheckpoint(eager=False)
     band_cols = [
         F.xxhash64(F.concat_ws(",", *[F.element_at("sig", b * rows_per_band + r + 1).cast("string")
                                       for r in range(rows_per_band)]), F.lit(b)).alias("band_hash")

@@ -15,8 +15,8 @@ this plan is ONE lazy DataFrame DAG over all days:
 The DAG runs once per call. Its inputs (the envelopes and the day spine)
 are JVM local relations, so no stage waits on Python workers except the
 embedding UDF, and ``run_daily_summary_pipeline`` takes its row count from
-an ``Observation`` that rides the upsert's write instead of re-running
-the DAG with a second action.
+the tally ``parquet_upsert`` observes during its write instead of
+re-running the DAG with a second action.
 
 At 100 TB the only changes are at the edges: envelopes land as
 date-partitioned JSON files read by ``envelope_files_to_df`` (partition
@@ -227,11 +227,11 @@ def run_daily_summary_pipeline(
     Idempotent: re-running any window leaves the sink unchanged modulo
     updated_at (K1 semantics).
 
-    The DAG runs once: the row count is an ``Observation`` that rides the
-    upsert's write (``sinks.upsert.observed_upsert``), not a second action
-    that would re-run every aggregate, the embedding and the sink merge."""
-    from quantum_rag_data_pipeline_spark.sinks.upsert import observed_upsert
+    The DAG runs once: the row count is the ``attempted`` tally the sink
+    observes during its write, not a second action that would re-run every
+    aggregate, the embedding and the sink merge."""
+    from quantum_rag_data_pipeline_spark.sinks.upsert import parquet_upsert
 
     rows = build_daily_summaries(spark, queries, weather_daily_avg, start, end, encoder, embed_dim)
     out = rows.select("vector_id", "embedding", "semantic_sentence", "updated_at")
-    return observed_upsert(spark, out, sink_path, ["vector_id"], version_col="updated_at")["attempted"]
+    return parquet_upsert(spark, out, sink_path, ["vector_id"], version_col="updated_at")["attempted"]

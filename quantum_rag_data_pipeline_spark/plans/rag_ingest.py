@@ -8,7 +8,7 @@ ERCOT daily summary, done for arbitrary documents at corpus scale.
       → near dedup     (MinHash-LSH candidates ≥ threshold → drop higher id)
       → embed          (Arrow pandas_udf; injected encoder, fake in tests)
       → vector store   (keyed parquet/JDBC upsert — idempotent re-runs)
-      → top-k serve    (brute-force or SRP-LSH cosine against the store)
+      → top-k serve    (brute-force cosine against the store)
 
 Each stage is one of the already-tested operators; this module only
 composes them, which is the point: a pipeline is a DataFrame → DataFrame
@@ -17,7 +17,7 @@ function chain, not an orchestration framework.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from quantum_rag_data_pipeline_spark.functions.embedding import make_embed_udf
@@ -60,16 +60,16 @@ def ingest(
     embed_dim: int = 64,
     near_dup_threshold: float = 0.6,
 ) -> dict:
-    """Full ingest; returns stage-count telemetry. Idempotent by doc_id."""
-    from quantum_rag_data_pipeline_spark.sinks.upsert import parquet_upsert
+    """Full ingest, idempotent by doc_id; returns stage-count telemetry.
+    The DAG runs once, as the upsert: the stage sizes are observed during
+    that one write, not counted by an action per stage."""
+    from quantum_rag_data_pipeline_spark.sinks.upsert import _observed, parquet_upsert
 
-    n_raw = docs.count()
-    gated = quality_gate(docs)
-    n_gated = gated.count()
-    exact = exact_dedup(gated)
-    n_exact = exact.count()
+    obs = {stage: Observation() for stage in ("raw", "after_quality", "after_exact_dedup")}
+    n = F.count(F.lit(1)).alias("rows")
+    gated = quality_gate(docs.observe(obs["raw"], n)).observe(obs["after_quality"], n)
+    exact = exact_dedup(gated).observe(obs["after_exact_dedup"], n)
     deduped = near_dedup(exact, threshold=near_dup_threshold)
-    n_final = deduped.count()
 
     embed = make_embed_udf(encoder, embed_dim)
     rows = deduped.select(
@@ -77,9 +77,9 @@ def ingest(
         embed(F.col("text")).alias("embedding"),
         F.current_timestamp().alias("updated_at"),
     )
-    parquet_upsert(spark, rows, store_path, ["doc_id"], version_col="updated_at")
-    return {"raw": n_raw, "after_quality": n_gated, "after_exact_dedup": n_exact,
-            "after_near_dedup": n_final}
+    written = parquet_upsert(spark, rows, store_path, ["doc_id"], version_col="updated_at")
+    return {**{stage: _observed(o).get("rows", 0) for stage, o in obs.items()},
+            "after_near_dedup": written["attempted"]}
 
 
 def serve_topk(spark: SparkSession, store_path: str, query_vecs: DataFrame,

@@ -6,7 +6,8 @@ The reference upserts one row per transaction into pgvector with
 
 - ``parquet_upsert`` — file-backed MERGE-equivalent used by tests and
   local pipelines: union new rows with existing, keep the newest row per
-  key. Atomic via write-to-staging + swap.
+  key. Atomic via write-to-staging + swap. The one sink the pipelines
+  write through; it returns a tally observed during its own write.
 - ``jdbc_upsert_writer`` — ``foreachPartition`` psycopg2 ``execute_values``
   upsert (batched, reference page_size=100 at pgvector_storage.py:140),
   import-gated so environments without psycopg2 still import this module.
@@ -22,9 +23,17 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def _observed(obs: Observation) -> dict:
+    """``obs``'s metrics once its action has finished, ``{}`` if it has
+    none: an input with no partitions (an empty local relation) runs no
+    task under a shuffle, and AQE drops that stage together with its
+    metrics node, which can only mean no row was observed."""
+    return obs.get if obs._jo.getRow().length() else {}
 
 
 def parquet_upsert(
@@ -33,13 +42,34 @@ def parquet_upsert(
     path: str,
     key_cols: list[str],
     version_col: str | None = None,
-) -> None:
+    validity_col: str | None = None,
+) -> dict:
     """MERGE-equivalent over a parquet table: newest row per key wins.
     ``version_col`` (e.g. updated_at) breaks ties; new rows outrank
-    existing rows at equal versions."""
-    new_rows = new_rows.withColumn("_src_rank", F.lit(1))
+    existing rows at equal versions. Returns the A6 tally (reference
+    dynamodb.py:185-228) ``{"attempted", "succeeded", "failed"}`` from an
+    ``Observation`` that rides the write — zero extra pass; the reference
+    re-iterates its results. ``validity_col`` is a boolean column marking
+    rows the sink accepts; invalid rows are filtered out and counted. An
+    empty input tallies 0 in every count."""
+    obs = Observation("sink_tally")
+    valid = F.col(validity_col) if validity_col else F.lit(True)
+    new_rows = (
+        new_rows.observe(
+            obs,
+            F.count(F.lit(1)).alias("attempted"),
+            F.count(F.when(valid, 1)).alias("succeeded"),
+            F.count(F.when(~valid, 1)).alias("failed"),
+        )
+        .filter(valid)
+        .drop(*([validity_col] if validity_col else []))
+        .withColumn("_src_rank", F.lit(1))
+    )
     if os.path.exists(path):
-        existing = spark.read.parquet(path).withColumn("_src_rank", F.lit(0))
+        # read in new_rows' session, so the merge's write runs in the session
+        # obs was registered with: only that session completes it (a
+        # foreachBatch micro-batch has a session of its own)
+        existing = new_rows.sparkSession.read.parquet(path).withColumn("_src_rank", F.lit(0))
         merged = existing.unionByName(new_rows)
     else:
         merged = new_rows
@@ -58,40 +88,7 @@ def parquet_upsert(
     # the session caches parquet file listings per path; the swap above
     # invalidated them
     spark.catalog.refreshByPath(path)
-
-
-def observed_upsert(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    path: str,
-    key_cols: list[str],
-    version_col: str | None = None,
-    validity_col: str | None = None,
-) -> dict:
-    """A6 (reference dynamodb.py:185-228): per-batch success/failure tally,
-    Spark-first — an ``Observation`` rides the write (zero extra pass; the
-    reference re-iterates results to count). ``validity_col`` is a boolean
-    column marking rows the sink will accept; invalid rows are filtered
-    out and counted. An empty input tallies 0 in every count."""
-    from pyspark.sql import Observation
-
-    obs = Observation("sink_tally")
-    valid = F.col(validity_col) if validity_col else F.lit(True)
-    observed = new_rows.observe(
-        obs,
-        F.count(F.lit(1)).alias("attempted"),
-        F.count(F.when(valid, 1)).alias("succeeded"),
-        F.count(F.when(~valid, 1)).alias("failed"),
-    )
-    to_write = observed.filter(valid).drop(*([validity_col] if validity_col else []))
-    parquet_upsert(spark, to_write, path, key_cols, version_col)
-    # An input with no partitions (an empty local relation) runs no task
-    # under the merge's shuffle, and AQE drops that stage together with its
-    # metrics node: the write then completes with no metrics at all, which
-    # can only mean no row was observed.
-    if obs._jo.getRow().length() == 0:
-        return {"attempted": 0, "succeeded": 0, "failed": 0}
-    return obs.get
+    return {"attempted": 0, "succeeded": 0, "failed": 0} | _observed(obs)
 
 
 def jdbc_upsert_writer(

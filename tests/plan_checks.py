@@ -1,7 +1,9 @@
-"""Assertions over a DataFrame's physical plan, shared by the tests."""
+"""Assertions over a DataFrame's physical plan and the jobs a call runs,
+shared by the tests."""
 
 import contextlib
 import io
+import uuid
 
 
 def assert_no_python_rdd_scan(df) -> str:
@@ -19,3 +21,15 @@ def assert_no_python_rdd_scan(df) -> str:
     for marker in ("ExistingRDD", "applySchemaToPythonRDD"):
         assert marker not in plan, plan
     return plan
+
+
+def jobs_of(spark, fn):
+    """``fn()`` under a fresh job group; returns (its result, its job count)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -4,10 +4,9 @@ through the full pipeline — fixture envelopes → aggregate → join →
 sentence → fake embedding → upsert."""
 
 import math
-import uuid
 
 import pytest
-from plan_checks import assert_no_python_rdd_scan
+from plan_checks import assert_no_python_rdd_scan, jobs_of
 from pyspark.sql import functions as F
 
 from quantum_rag_data_pipeline_spark.plans.daily_summary import (
@@ -168,29 +167,17 @@ class EmptyClient:
         return {"fields": [{"name": f} for f in fields], "data": []}
 
 
-def _jobs_of(spark, fn):
-    """``fn()`` under a fresh job group; returns (its result, its job count)."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "count the jobs of one call")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_pipeline_runs_its_dag_once(spark, golden_queries, tmp_path):
     """The row count rides the upsert's write: a pipeline call runs exactly
     the jobs of a bare upsert of the same built frame (a closing count()
     re-ran the whole DAG, doubling them). A window in which every endpoint
     is empty returns 0 and writes no rows."""
     args = (spark, golden_queries, _weather(spark), "2025-05-08", "2025-05-09")
-    n, pipeline_jobs = _jobs_of(
+    n, pipeline_jobs = jobs_of(
         spark, lambda: run_daily_summary_pipeline(*args, str(tmp_path / "sink"), embed_dim=8))
     built = build_daily_summaries(*args, embed_dim=8).select(
         "vector_id", "embedding", "semantic_sentence", "updated_at")
-    _, upsert_jobs = _jobs_of(spark, lambda: parquet_upsert(
+    _, upsert_jobs = jobs_of(spark, lambda: parquet_upsert(
         spark, built, str(tmp_path / "bare"), ["vector_id"], version_col="updated_at"))
     assert n == 1
     assert pipeline_jobs == upsert_jobs > 0

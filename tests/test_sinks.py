@@ -73,27 +73,23 @@ def test_kv_conditional_put_keeps_existing(spark, tmp_path):
     assert second == first  # attribute_not_exists semantics: no overwrite
 
 
-def test_observed_upsert_tally(spark, tmp_path):
-    from quantum_rag_data_pipeline_spark.sinks.upsert import observed_upsert
-
+def test_parquet_upsert_tally(spark, tmp_path):
     path = str(tmp_path / "obs")
     df = spark.createDataFrame(
         [("a", 1, True), ("b", 2, True), ("c", 3, False)],
         "id string, v int, ok boolean",
     )
-    tally = observed_upsert(spark, df, path, ["id"], validity_col="ok")
+    tally = parquet_upsert(spark, df, path, ["id"], validity_col="ok")
     assert tally == {"attempted": 3, "succeeded": 2, "failed": 1}
     stored = {r["id"] for r in spark.read.parquet(path).collect()}
     assert stored == {"a", "b"}
 
 
-def test_observed_upsert_tally_of_empty_inputs(spark, tmp_path):
+def test_parquet_upsert_tally_of_empty_inputs(spark, tmp_path):
     """An empty input tallies zeros, whether it is a Python-RDD scan, whose
     tasks still report the observation, or an empty local relation, which
     runs no task under the merge's shuffle and so reports no metrics."""
     import pyarrow as pa
-
-    from quantum_rag_data_pipeline_spark.sinks.upsert import observed_upsert
 
     schema = "id string, ok boolean"
     inputs = {
@@ -103,6 +99,17 @@ def test_observed_upsert_tally_of_empty_inputs(spark, tmp_path):
     }
     for name, df in inputs.items():
         path = str(tmp_path / name)
-        tally = observed_upsert(spark, df, path, ["id"], validity_col="ok")
+        tally = parquet_upsert(spark, df, path, ["id"], validity_col="ok")
         assert tally == {"attempted": 0, "succeeded": 0, "failed": 0}, name
         assert spark.read.parquet(path).count() == 0
+
+
+def test_parquet_upsert_tally_of_another_sessions_frame(spark, tmp_path):
+    """A frame from another session (a foreachBatch micro-batch has its own)
+    is merged and observed in that session, so its tally completes when the
+    sink already holds rows."""
+    path = str(tmp_path / "sink")
+    parquet_upsert(spark, spark.createDataFrame([("a", 1)], "id string, v int"), path, ["id"])
+    other = spark.newSession().createDataFrame([("a", 2), ("b", 3)], "id string, v int")
+    assert parquet_upsert(spark, other, path, ["id"]) == {"attempted": 2, "succeeded": 2, "failed": 0}
+    assert {(r["id"], r["v"]) for r in spark.read.parquet(path).collect()} == {("a", 2), ("b", 3)}
